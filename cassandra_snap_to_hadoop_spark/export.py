@@ -6,15 +6,16 @@ Cassandra snapshot into HDFS; this module is that exact surface on Spark:
     python -m cassandra_snap_to_hadoop_spark.export \
         --data-dir /var/lib/cassandra/data --keyspace ks1 --table events \
         --tag snap-2026-08-13 --out hdfs://nn/warehouse/ks1/events \
-        [--merge] [--asof-micros N] [--partition-by col ...] [--verify]
+        [--merge] [--asof-micros N] [--partition-by col ...] [--no-verify]
 
 Where the reference copies raw SSTable bytes file-by-file through
 ``hadoop fs -put``, this job is one Spark plan: snapshot scan (per-SSTable
 parallel) -> optional LWW merge + tombstone/TTL application -> partitioned
-columnar write -> content-checksum verification.  Raw mode (no --merge)
-preserves every generation's rows plus ``_sstable`` lineage, byte-for-byte
-relocatable like the reference; merged mode lands the queryable
-point-in-time state.
+columnar write.  The write job fingerprints the rows it writes, and
+verification compares that with one scan of the sink, so every SSTable is
+decoded exactly once per export.  Raw mode (no --merge) preserves every
+generation's rows plus ``_sstable`` lineage, byte-for-byte relocatable like
+the reference; merged mode lands the queryable point-in-time state.
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ import json
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from cassandra_snap_to_hadoop_spark.operators.cassandra import (
     apply_tombstones,
@@ -47,18 +47,18 @@ def export_snapshot(
     asof_micros: int | None = None,
     partition_by: list[str] | None = None,
     verify: bool = True,
-    observed: bool = False,
 ) -> dict:
-    """Run the export; returns a summary dict (rows, files verified, mode).
-
-    ``observed=True`` uses the fused verification tier: source count +
-    checksum are accumulated by the write job itself (``df.observe``), so
-    verification costs one sink scan instead of a second full source pass —
-    the default for large exports."""
+    """Run the export; returns ``{mode, rows_exported, verified, out}``,
+    where ``rows_exported`` is the row count the write job observed."""
     df: DataFrame = snapshot_scan(spark, data_dir, keyspace, table, tag)
     mode = "raw"
     if merge:
         mode = "merged"
+        if "_writetime" not in df.columns:
+            # binary SSTables carry cell timestamps, not a _writetime
+            # column; a table that declares one (the parquet stand-ins)
+            # must keep it rather than get a duplicate synthetic column
+            df = snapshot_scan(spark, data_dir, keyspace, table, tag, writetime="true")
         keys = key_cols or ["pk", "ck"]
         seq = "_seq" if "_seq" in df.columns else None
         df = lww_merge(df.drop("_sstable"), keys, "_writetime", seq)
@@ -66,24 +66,8 @@ def export_snapshot(
             df = apply_tombstones(df)
         if asof_micros is not None and "_ttl" in df.columns:
             df = apply_ttl(df, asof_micros)
-    if observed:
-        from cassandra_snap_to_hadoop_spark.sources.sinks import (
-            export_parquet_observed,
-            verify_export_observed,
-        )
-
-        n, checksum = export_parquet_observed(df, out, partition_by=partition_by, mode="overwrite")
-        ok = verify_export_observed(spark, out, (n, checksum), df.columns) if verify else None
-        return {
-            "mode": mode,
-            "rows_exported": n,
-            "verified": ok,
-            "out": out,
-            "observed_checksum": checksum,
-        }
-    export_parquet(df, out, partition_by=partition_by, mode="overwrite")
-    ok = verify_export(spark, df, out, key_cols or []) if verify else None
-    n = spark.read.parquet(out).count()
+    n, checksum = export_parquet(df, out, partition_by=partition_by, mode="overwrite")
+    ok = verify_export(spark, out, (n, checksum), df.columns) if verify else None
     return {"mode": mode, "rows_exported": n, "verified": ok, "out": out}
 
 
@@ -99,11 +83,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--asof-micros", type=int, default=None)
     ap.add_argument("--partition-by", nargs="*", default=None)
     ap.add_argument("--no-verify", action="store_true")
-    ap.add_argument(
-        "--observed",
-        action="store_true",
-        help="fused verification: in-flight df.observe metrics, one sink scan",
-    )
     args = ap.parse_args(argv)
 
     from cassandra_snap_to_hadoop_spark.session import get_spark
@@ -121,7 +100,6 @@ def main(argv: list[str] | None = None) -> int:
         asof_micros=args.asof_micros,
         partition_by=args.partition_by,
         verify=not args.no_verify,
-        observed=args.observed,
     )
     print(json.dumps(summary))
     return 0 if summary["verified"] in (True, None) else 1

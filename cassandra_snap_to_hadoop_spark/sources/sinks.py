@@ -6,6 +6,12 @@ partitioned, compressed parquet write whose layout is chosen for downstream
 reads: partition columns enable static + dynamic partition pruning, and a
 bounded file count per partition keeps the small-file problem away from the
 NameNode (the classic failure mode of file-copy ETL at scale).
+
+Verification is one path: the write job fingerprints the rows it consumes
+(count + order-insensitive content checksum, observed in-flight), and
+``verify_export`` recomputes the same fingerprint in one scan of the sink.
+The source is therefore read once per export — for SSTable snapshots that
+read is the pure-Python decode, by far the dominant cost.
 """
 
 from __future__ import annotations
@@ -14,49 +20,59 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def _fingerprint(cols: list[str]) -> list:
+    """Row count + order-insensitive content checksum over ``cols``, as
+    aggregate expressions.  The per-row hash is reduced mod 2^31 before
+    summing: commutative, and it cannot overflow the long accumulator under
+    ANSI arithmetic at any row count that fits a cluster."""
+    h = F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in sorted(cols)]), F.lit(2_147_483_647))
+    return [F.count(F.lit(1)).alias("n"), F.coalesce(F.sum(h), F.lit(0)).alias("checksum")]
+
+
 def export_parquet(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
     mode: str = "overwrite",
     max_files_per_partition: int | None = None,
-) -> None:
-    """A4: partitioned snappy parquet export.
+) -> tuple[int, int]:
+    """A4: partitioned snappy parquet export; returns ``(n_rows, checksum)``
+    of exactly the rows the writer consumed.
+
+    The fingerprint is accumulated BY the write job itself (``df.observe``
+    attaches the aggregates to the write plan without an extra action), so
+    the source is read and decoded once; ``verify_export`` then compares it
+    with one scan of what landed.
 
     ``max_files_per_partition`` repartitions by the partition columns first
     so each output directory gets a bounded number of files — at 100 TB an
     unrepartitioned write emits (shuffle partitions × partition values)
     files, which is how data lakes drown in 4 KB objects.
     """
-    writer_df = df
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    writer_df = df.observe(obs, *_fingerprint(df.columns))
     if partition_by and max_files_per_partition:
-        writer_df = df.repartition(max_files_per_partition, *[F.col(c) for c in partition_by])
+        writer_df = writer_df.repartition(max_files_per_partition, *[F.col(c) for c in partition_by])
     writer = writer_df.write.mode(mode).option("compression", "snappy")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+    got = obs.get
+    return int(got["n"]), int(got["checksum"])
 
 
-def verify_export(spark: SparkSession, df: DataFrame, path: str, key_cols: list[str]) -> bool:
-    """A6 post-copy verification: re-scan the sink and compare row count +
-    order-insensitive content checksum against the source (the reference
-    verifies transfers by listing; content hashing is the stronger check
-    and still one distributed pass per side)."""
-    back = spark.read.parquet(path)
-    cols = sorted(df.columns)
-
-    def fingerprint(d: DataFrame):
-        # per-row hash reduced mod 2^31 before summing: commutative,
-        # order-insensitive, and cannot overflow the long accumulator
-        # under ANSI arithmetic at any row count that fits a cluster.
-        h = F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in cols]), F.lit(2_147_483_647))
-        row = d.select(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(h).alias("checksum"),
-        ).collect()[0]
-        return (row.n, row.checksum)
-
-    return fingerprint(df.select(*cols)) == fingerprint(back.select(*cols))
+def verify_export(
+    spark: SparkSession, path: str, expected: tuple[int, int], cols: list[str]
+) -> bool:
+    """A6 post-copy verification: one scan of the sink computes the row
+    count and content checksum together and compares them with
+    ``expected``, the in-flight fingerprint ``export_parquet`` returned.
+    The reference verifies transfers by listing; content hashing also
+    catches a part file that landed altered, short or not at all."""
+    row = spark.read.parquet(path).select(*_fingerprint(cols)).collect()[0]
+    return (int(row.n), int(row.checksum)) == tuple(expected)
 
 
 def read_csv(spark: SparkSession, path: str, schema_ddl: str, **options) -> DataFrame:
@@ -68,40 +84,3 @@ def read_csv(spark: SparkSession, path: str, schema_ddl: str, **options) -> Data
 def read_json(spark: SparkSession, path: str, schema_ddl: str, **options) -> DataFrame:
     """A3: JSON-lines ingest with an explicit schema."""
     return spark.read.schema(schema_ddl).options(**options).json(path)
-
-
-def export_parquet_observed(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-    max_files_per_partition: int | None = None,
-) -> tuple[int, int]:
-    """A4+A6 fused: export with ``df.observe`` metrics — the source-side
-    row count and content checksum are accumulated BY the write job itself
-    (Spark's observation API attaches aggregates to the plan without an
-    extra action), so post-copy verification drops from three distributed
-    passes (write + source re-scan + sink re-scan) to two.  At 100 TB the
-    saved pass is hours.  Returns (n_rows, checksum) as observed in-flight.
-    """
-    from pyspark.sql import Observation
-
-    cols = sorted(df.columns)
-    h = F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in cols]), F.lit(2_147_483_647))
-    obs = Observation("export_metrics")
-    observed = df.observe(obs, F.count(F.lit(1)).alias("n"), F.sum(h).alias("checksum"))
-    export_parquet(observed, path, partition_by, mode, max_files_per_partition)
-    got = obs.get
-    return int(got["n"]), int(got["checksum"])
-
-
-def verify_export_observed(
-    spark: SparkSession, path: str, expected: tuple[int, int], cols: list[str]
-) -> bool:
-    """Sink-side half of the observed verification: one scan of the export,
-    same commutative fingerprint, compared to the in-flight metrics."""
-    back = spark.read.parquet(path)
-    cols = sorted(cols)
-    h = F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in cols]), F.lit(2_147_483_647))
-    row = back.select(F.count(F.lit(1)).alias("n"), F.sum(h).alias("checksum")).collect()[0]
-    return (int(row.n), int(row.checksum)) == expected

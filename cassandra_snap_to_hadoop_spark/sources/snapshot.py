@@ -26,10 +26,16 @@ filename (``oa-``/``na-``/``nb-``/``ma-<gen>-big-Data.db`` vs
 unsupported-format error rather than silently misreading.
 
 Design for scale: one ``InputPartition`` per snapshot file (SSTable) — the
-natural parallelism unit of a snapshot; readers stream Arrow batches, so a
-1000-executor cluster ingests 1000 SSTables concurrently with zero driver
-involvement beyond listing.  Schema comes from ``schema.cql`` (Cassandra
-ships it inside every snapshot since 3.0), never from file inference.
+natural parallelism unit of a snapshot, so a 1000-executor cluster ingests
+1000 SSTables concurrently with zero driver involvement beyond listing.
+Schema comes from ``schema.cql`` (Cassandra ships it inside every snapshot
+since 3.0), never from file inference.
+
+Memory per task is NOT yet bounded for binary SSTables: parquet stand-ins
+are read as Arrow, but ``_read_sstable`` reads the whole Data.db into
+memory and builds a Python list for every column before making one Arrow
+table, so task memory grows with SSTable size.  Streaming, split-able
+decode is ROADMAP direction 3.
 """
 
 from __future__ import annotations

@@ -4,6 +4,7 @@ fixtures (FIXTURES.md §3.1)."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -19,9 +20,11 @@ from cassandra_snap_to_hadoop_spark.sources.sinks import (
 from cassandra_snap_to_hadoop_spark.sources.snapshot import (
     incremental_new_files,
     parse_schema_cql,
+    parse_table_meta,
     snapshot_manifest,
     snapshot_scan,
 )
+from cassandra_snap_to_hadoop_spark.sources.sstable_na import write_na_data_db
 
 SCHEMA_CQL = """
 CREATE TABLE ks1.events_wide (
@@ -128,8 +131,9 @@ def test_export_and_verify_roundtrip(spark, sf_dir, tmp_path):
 
     li = load(spark, sf_dir, "lineitem").withColumn("ship_year", F.year("l_shipdate"))
     out = str(tmp_path / "lineitem_export")
-    export_parquet(li, out, partition_by=["ship_year"], max_files_per_partition=2)
-    assert verify_export(spark, li, out, ["l_orderkey", "l_linenumber"])
+    n, checksum = export_parquet(li, out, partition_by=["ship_year"], max_files_per_partition=2)
+    assert n == li.count()
+    assert verify_export(spark, out, (n, checksum), li.columns)
     # partition pruning layout exists
     years = [d for d in os.listdir(out) if d.startswith("ship_year=")]
     assert len(years) >= 5
@@ -150,15 +154,107 @@ def test_export_job_raw_and_merged(spark, snapshot_fixture, tmp_path):
         str(tmp_path / "merged"), merge=True, key_cols=["pk", "ck"],
     )
     assert merged["mode"] == "merged" and merged["verified"] is True
+    assert merged["rows_exported"] == 3
     back = {(r.pk, r.ck): r.v1 for r in spark.read.parquet(str(tmp_path / "merged")).collect()}
     assert back == {(1, 1): "a2", (1, 2): "b", (3, 1): "d"}
-    # observed tier: same merged answer, verification from in-flight metrics
-    observed = export_snapshot(
-        spark, snapshot_fixture, "ks1", "events_wide", "tag-001",
-        str(tmp_path / "obs"), merge=True, key_cols=["pk", "ck"], observed=True,
-    )
-    assert observed["mode"] == "merged" and observed["verified"] is True
-    assert observed["rows_exported"] == 3 and "observed_checksum" in observed
+
+
+def test_export_job_merged_binary_na(spark, tmp_path):
+    """A merged export of real ``na`` SSTables: the table declares no
+    ``_writetime`` column, so the job must ask the source for the cell
+    writetimes that LWW orders by, then land exactly the survivors."""
+    from cassandra_snap_to_hadoop_spark.export import export_snapshot
+
+    cql = """CREATE TABLE ks2.kv (
+    pk bigint,
+    ck int,
+    name text,
+    score double,
+    PRIMARY KEY (pk, ck)
+);"""
+    snap = tmp_path / "ks2" / "kv" / "snapshots" / "t1"
+    snap.mkdir(parents=True)
+    (snap / "schema.cql").write_text(cql)
+    meta = parse_table_meta(cql)
+
+    def write_gen(gen: int, rows):
+        by_pk: dict[int, list] = {}
+        for pk, ck, name, score, ts in rows:
+            by_pk.setdefault(pk, []).append(
+                {"clustering": (ck,), "marker_ts": ts, "cells": {
+                    "name": ("live", ts, name), "score": ("live", ts, score)}}
+            )
+        parts = [{"key": (pk,), "deletion": None, "rows": by_pk[pk]} for pk in sorted(by_pk)]
+        write_na_data_db(str(snap / f"na-{gen}-big-Data.db"), parts, meta, version="na")
+
+    write_gen(1, [(1, 1, "a", 1.0, 100), (1, 2, "b", 2.0, 100), (2, 1, "c", 3.0, 100)])
+    write_gen(2, [(1, 1, "a2", 1.5, 200), (3, 1, "d", 4.0, 200)])
+    out = str(tmp_path / "merged")
+    merged = export_snapshot(spark, str(tmp_path), "ks2", "kv", "t1", out, merge=True)
+    assert merged["verified"] is True and merged["rows_exported"] == 4
+    back = {(r.pk, r.ck): (r.name, r.score) for r in spark.read.parquet(out).collect()}
+    assert back == {
+        (1, 1): ("a2", 1.5), (1, 2): ("b", 2.0), (2, 1): ("c", 3.0), (3, 1): ("d", 4.0),
+    }
+
+
+def test_verify_export_fails_closed_on_tampered_sink(spark, tmp_path):
+    """The one verification path must catch a sink that landed wrong: a
+    part file rewritten with one value changed, or a part file lost."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    df = spark.range(200).selectExpr("id", "CAST(id * 3 AS STRING) AS s").repartition(4)
+    out = str(tmp_path / "sink")
+    expected = export_parquet(df, out)
+    assert expected[0] == 200
+    assert verify_export(spark, out, expected, df.columns)
+    parts = sorted(os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet"))
+    assert len(parts) >= 2
+
+    table = pq.read_table(parts[0])
+    s = table.column("s").to_pylist()
+    s[0] = s[0] + "x"
+    pq.write_table(table.set_column(1, "s", pa.array(s, pa.string())), parts[0])
+    # a consistent replacement: drop the local filesystem's stale .crc
+    # sidecar, which would otherwise reject the file before verification
+    head, tail = os.path.split(parts[0])
+    os.remove(os.path.join(head, f".{tail}.crc"))
+    assert not verify_export(spark, out, expected, df.columns)
+
+    os.remove(parts[0])
+    assert not verify_export(spark, out, expected, df.columns)
+
+
+def test_export_empty_frame_verifies(spark, tmp_path):
+    """An empty export (an all-tombstoned merge, an empty snapshot) has a
+    zero fingerprint on both sides, not a NULL checksum."""
+    df = spark.range(0).selectExpr("id", "CAST(id AS STRING) AS s")
+    out = str(tmp_path / "empty")
+    assert export_parquet(df, out) == (0, 0)
+    assert verify_export(spark, out, (0, 0), df.columns)
+
+
+def test_export_cli_main(spark, snapshot_fixture, tmp_path, capsys, monkeypatch):
+    """``python -m ...export``: exit 0 and one JSON summary line on a
+    verified export; the retired ``--observed`` flag is rejected."""
+    from cassandra_snap_to_hadoop_spark import session
+    from cassandra_snap_to_hadoop_spark.export import main
+
+    # reuse the test session as is: get_spark would reset its SQL confs
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    args = [
+        "--data-dir", snapshot_fixture, "--keyspace", "ks1", "--table", "events_wide",
+        "--tag", "tag-001", "--out", str(tmp_path / "cli"),
+    ]
+    assert main(args) == 0
+    lines = capsys.readouterr().out.strip().splitlines()
+    assert len(lines) == 1
+    summary = json.loads(lines[0])
+    assert summary["verified"] is True and summary["rows_exported"] == 6
+    with pytest.raises(SystemExit) as exc:
+        main(args + ["--observed"])
+    assert exc.value.code == 2
 
 
 def test_csv_json_roundtrip(spark, tmp_path):
@@ -174,19 +270,16 @@ def test_csv_json_roundtrip(spark, tmp_path):
 
 
 def test_export_observed_metrics_roundtrip(spark, sf_dir, tmp_path):
-    """Observed export: in-flight count+checksum from df.observe must match
-    a fresh scan of the written data (and detect corruption: a different
-    frame's fingerprint must NOT verify)."""
+    """The in-flight count+checksum ``export_parquet`` observes must match
+    a fresh scan of the written data, and a tampered expectation must NOT
+    verify."""
     from cassandra_snap_to_hadoop_spark.io import load
-    from cassandra_snap_to_hadoop_spark.sources.sinks import (
-        export_parquet_observed,
-        verify_export_observed,
-    )
 
     o = load(spark, sf_dir, "orders").withColumn("order_year", F.year("o_orderdate"))
     out = str(tmp_path / "orders_obs")
-    metrics = export_parquet_observed(o, out, partition_by=["order_year"], max_files_per_partition=2)
+    metrics = export_parquet(o, out, partition_by=["order_year"], max_files_per_partition=2)
     assert metrics[0] == o.count()
-    assert verify_export_observed(spark, out, metrics, o.columns)
+    assert verify_export(spark, out, metrics, o.columns)
+    assert len([d for d in os.listdir(out) if d.startswith("order_year=")]) >= 5
     # tampered expectation fails closed
-    assert not verify_export_observed(spark, out, (metrics[0] - 1, metrics[1]), o.columns)
+    assert not verify_export(spark, out, (metrics[0] - 1, metrics[1]), o.columns)
